@@ -3,17 +3,17 @@ functions, one closed-loop client on ``local[<cores>]``.
 
 Run from the repository root::
 
-    python3 perfbench/run.py --workload tiles_dense --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload tiles_dense --seed 1 --seconds 10 --trace 0
 
 Workloads (see ``workloads.py``): ``tiles_dense`` and
-``leaf_operators``. Each run starts one Spark session, stages inputs on a
-fixed warm-up seed at a quarter of the timed size and makes one untimed
-warm-up call, whose outputs must match the digest pinned in
-``digests.json`` (recorded with every check below passing). It then
-stages fresh inputs from ``--seed`` and makes timed calls until
-``--seconds`` have passed (at least one); each timed call's outputs are
-checked by ``Workload.check``. A failed call, digest or check counts in
-``failed``; the run log on stderr also prints it as ``error_rate``.
+``leaf_operators``. Each run starts one Spark session and makes one
+untimed warm-up call on a fixed seed at a quarter of the timed size,
+whose outputs must also match the digest pinned in ``digests.json``.
+It then stages fresh inputs from ``--seed`` for each timed call and
+makes at least one, and further ones while the next should end within
+``--seconds``. Every call's outputs are checked by ``Workload.check``.
+A failed call, digest or check counts in ``failed``; the run log on
+stderr also prints it as ``error_rate``.
 
 ``--trace 0`` reports the end-to-end metrics:
 
@@ -191,10 +191,9 @@ def run(args, spark, wl, tracer) -> dict:
             t1 = time.perf_counter()
             res = wl.call(inp, traced)
             t2 = time.perf_counter()
-            if check_pin:  # the pinned digest was recorded with every check passing
-                errs = [] if res.digest == pinned else [f"digest {res.digest} != pinned {pinned}"]
-            else:
-                errs = wl.check(inp, res)
+            errs = wl.check(inp, res)
+            if check_pin and res.digest != pinned:
+                errs.append(f"digest {res.digest} != pinned {pinned}")
             log(
                 f"{wl.name} seed {seed}: prepare {t1 - t0:.2f} s, call {res.seconds:.2f} s "
                 f"(+{t2 - t1 - res.seconds:.2f} s digest), check {time.perf_counter() - t2:.2f} s"
@@ -218,10 +217,19 @@ def run(args, spark, wl, tracer) -> dict:
     calls: list[tuple[bool, object, int]] = []
     m0 = time.perf_counter()
     i = 0
-    # a traced run alternates plain and traced calls, ending plain
-    while i < (3 if args.trace else 1) or time.perf_counter() - m0 < args.seconds or (
-        args.trace and i % 2 == 0
-    ):
+
+    def more() -> bool:
+        # a traced run alternates plain and traced calls, ending plain
+        if i < (3 if args.trace else 1) or (args.trace and i % 2 == 0):
+            return True
+        # Start another call only if it should end within --seconds. Call
+        # times after a single warm-up keep falling, at a rate that differs
+        # from session to session, so a second call of the same length
+        # widens the run-to-run spread instead of narrowing it.
+        elapsed = time.perf_counter() - m0
+        return elapsed + elapsed / i <= args.seconds
+
+    while more():
         traced = bool(args.trace) and i % 2 == 1
         if tracer is not None:
             tracer.run_id = i

@@ -152,7 +152,7 @@ class TilesDense(Workload):
     sink), then the four COCO tables exported with ``write_table``."""
 
     name, rate_name = "tiles_dense", "images_per_s"
-    N_IMAGES = 48
+    N_IMAGES = 24
     N_LABELS = 2000
 
     def prepare(self, seed: int, scale: float) -> dict:
