@@ -72,6 +72,19 @@ def copy_dataset(
     return state
 
 
+def _checked_shard_count(rows: DataFrame, manifest: dict, section: str) -> int:
+    """Row count of a shard section, checked against the manifest's
+    ``count``. The count seeds the next id of its table, so a stale or
+    hand-edited manifest would otherwise mint colliding ids silently."""
+    n = rows.count()
+    if "count" in manifest and int(manifest["count"]) != n:
+        raise ValueError(
+            f"{section} manifest says count={manifest['count']} but "
+            f"{manifest['dir']} holds {n} rows"
+        )
+    return n
+
+
 @dataclass
 class CocoState:
     """Driver handle on the four engine tables + info.
@@ -318,7 +331,8 @@ class CocoState:
         ``annotation_shards`` manifest written by
         ``to_json_file(shard_annotations_dir=...)`` — the shards load as
         a distributed ``spark.read.json`` scan (never through the
-        driver)."""
+        driver). A shard manifest whose ``count`` disagrees with its
+        shards raises ``ValueError``."""
         with open(path) as fh:
             doc = json.load(fh)
 
@@ -345,9 +359,7 @@ class CocoState:
                     ),
                 )
             )
-            n_shard_imgs = (
-                int(img_shards["count"]) if "count" in img_shards else images.count()
-            )
+            n_shard_imgs = _checked_shard_count(images, img_shards, "image_shards")
         else:
             images = spark.createDataFrame(
                 [
@@ -380,9 +392,7 @@ class CocoState:
                     "iscrowd",
                 )
             )
-            n_shard_anns = (
-                int(shards["count"]) if "count" in shards else annotations.count()
-            )
+            n_shard_anns = _checked_shard_count(annotations, shards, "annotation_shards")
         else:
             annotations = spark.createDataFrame(
                 [

@@ -43,12 +43,15 @@ def sessionize(
     cuts force a provisional break at each bucket's first event, and
     the merge pass re-tests precisely those cuts against the true
     previous event (the prior segment's end — segments partition the
-    user's events in time order). Segment starts are unique per user
-    (two segments in one bucket start > gap apart; equal timestamps
-    share a bucket and, at gap 0 <= threshold, a segment), so the
-    merge ordering is total without the tiebreak. State per task is
-    one (user, bucket) slice in pass 1 and one user's SEGMENTS (bounded
-    by active-time / gap, not by event count) in pass 2.
+    user's events in time order). Non-NULL segment starts are unique
+    per user (two segments in one bucket start > gap apart; equal
+    timestamps share a bucket and, at gap 0 <= threshold, a segment).
+    Events with a NULL ``ts`` each form a one-event segment with a NULL
+    start, so the merge pass breaks start ties on the segment's least
+    ``order_tiebreak`` — the order the single window gives them. State
+    per task is one (user, bucket) slice in pass 1 and one user's
+    SEGMENTS (bounded by active-time / gap, not by event count) in
+    pass 2.
     ``bucket=None`` restores the single-window shape (one exchange,
     per-task state = one user's full history — fine when no key is
     hot). Gap arithmetic is timestamp SUBTRACTION vs an interval
@@ -114,12 +117,13 @@ def sessionize(
             F.count(F.lit(1)).cast("long").alias("__n"),
             F.min(ts_col).alias("__start"),
             F.max(ts_col).alias("__end"),
+            F.min(order_tiebreak).alias("__tb"),
         )
     )
     # pass 2: sessionize the SEGMENTS per user — merge across bucket
     # cuts where the boundary gap (this start vs previous end) is
     # within threshold, then renumber in time order
-    w2 = Window.partitionBy(user_col).orderBy("__start")
+    w2 = Window.partitionBy(user_col).orderBy("__start", "__tb")
     gap2 = F.col("__start") - F.lag(F.col("__end")).over(w2)
     new2 = F.when(gap2.isNull() | (gap2 > gap_lit), 1).otherwise(0)
     session_idx2 = (

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geococo_spark.operators.dedup import portable_hash60
+from geococo_spark.operators.partitioning import spread
 
 # default 90/5/5 split, expressed in basis points so every threshold
 # comparison is exact integer arithmetic in BOTH engines (no float
@@ -205,13 +206,11 @@ def _with_running_total(
     """
     spark = df.sparkSession
     nparts = num_partitions or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < nparts:
-        # compact inputs (single parquet file -> 1-2 splits) otherwise
-        # evaluate the upstream projection (tokenization, usually) on
-        # 1-2 cores TWICE — once for the range sampler, once for the
-        # real pass. One keyed exchange of the thin projected rows
-        # spreads both (round 8).
-        df = df.repartition(nparts, F.col(order_col))
+    # a compact input would evaluate the upstream projection
+    # (tokenization, usually) on 1-2 cores TWICE — once for the range
+    # sampler, once for the real pass. One keyed exchange of the thin
+    # projected rows spreads both (round 8).
+    df = spread(df, order_col)
     ranged = (
         df.repartitionByRange(nparts, F.col(order_col))
         .sortWithinPartitions(order_col)

@@ -23,6 +23,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
+from geococo_spark.operators.partitioning import spread
+
 
 def _qvec(col: "F.Column", scale: int = 1000) -> "F.Column":
     return F.transform(col, lambda x: F.round(x * scale).cast("long"))
@@ -402,7 +404,7 @@ def neardup_candidate_ids(
 
 
 def _bucket_pair_dots_fn(threshold: float, max_bucket_size: int | None, margin: float = 2e-6):
-    """Per-(table, bucket) verify body for the grouped near-dup path
+    """Per-(table, bucket) verify body of the bucket near-dup path
     (round 8, guide §8: decide with small matrices, never attach vectors
     to an exploded candidate set). One BLAS matmul per bucket computes
     every member-pair integer dot product; pairs whose cosine clears
@@ -422,9 +424,9 @@ def _bucket_pair_dots_fn(threshold: float, max_bucket_size: int | None, margin: 
     that bound falls back to an int64 matmul whose wraparound matches
     Java long arithmetic (the fold the attach path uses).
 
-    ``max_bucket_size`` is enforced HERE (group size == the bucket census
+    ``max_bucket_size`` is enforced HERE (run size == the bucket census
     the census-join used to compute): an oversize bucket emits nothing —
-    identical semantics, zero extra shuffle. Memory per task is the
+    identical semantics, zero extra shuffle. Memory per call is the
     bucket's (m x dim) matrix plus one (block x m) dot block — bounded by
     the row-block loop, never the full m x m matrix."""
 
@@ -494,6 +496,53 @@ def _bucket_pair_dots_fn(threshold: float, max_bucket_size: int | None, margin: 
     return _fn
 
 
+def _sorted_bucket_verify_fn(threshold: float, max_bucket_size: int | None):
+    """``mapInPandas`` body of the bucket verify: the partition arrives
+    sorted on (t, b), so each bucket is one contiguous run of rows, and
+    :func:`_bucket_pair_dots_fn` runs once per run. One Python call per
+    partition replaces one grouped-pandas call per bucket, whose fixed
+    cost dominated on the many small buckets.
+
+    A run may straddle Arrow batches: the open run is carried to the
+    next batch, so memory is bounded by the largest bucket plus one
+    batch, never by the partition. A run that passes
+    ``max_bucket_size`` is discarded on the spot and its remaining rows
+    are skipped — the same "emit nothing" rule as the per-bucket body."""
+    verify = _bucket_pair_dots_fn(threshold, max_bucket_size)
+
+    def _fn(batches):
+        key, pieces, n = None, [], 0  # open run: (t, b), rows (None once capped), size
+        out: list[pd.DataFrame] = []
+
+        def close() -> None:
+            if pieces:
+                res = verify(pd.concat(pieces))
+                if len(res):
+                    out.append(res)
+
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            t = pdf["t"].to_numpy()
+            b = pdf["b"].to_numpy()
+            starts = [0, *(np.flatnonzero((t[1:] != t[:-1]) | (b[1:] != b[:-1])) + 1).tolist()]
+            for lo, hi in zip(starts, starts[1:] + [len(pdf)]):
+                if (t[lo], b[lo]) != key:
+                    close()
+                    key, pieces, n = (t[lo], b[lo]), [], 0
+                n += hi - lo
+                if pieces is not None:
+                    capped = max_bucket_size is not None and n > max_bucket_size
+                    pieces = None if capped else pieces + [pdf.iloc[lo:hi]]
+            if out:
+                yield pd.concat(out, ignore_index=True)
+                out.clear()
+        close()
+        yield from out
+
+    return _fn
+
+
 def embedding_near_duplicates(
     vectors: DataFrame,
     dim: int,
@@ -557,9 +606,12 @@ def embedding_near_duplicates(
     ``verify_mode`` (round 8, guide §8 "move heavy bytes once"):
 
     - ``"bucket"`` (default) — the quantized vectors ride the ONE
-      banding exchange (keyed on (table, bucket)) and every bucket's
-      pairwise dots come from a single BLAS matmul inside a grouped
-      Arrow pass (:func:`_bucket_pair_dots_fn`); only near-threshold
+      banding exchange (a by-number repartition on (table, bucket) to
+      ``defaultParallelism`` partitions, sorted within each) and every
+      bucket's pairwise dots come from a single BLAS matmul in a
+      per-partition Arrow pass that walks the sorted bucket runs
+      (:func:`_sorted_bucket_verify_fn`, one Python call per partition
+      rather than one per bucket); only near-threshold
       survivor pairs (plus non-finite-cosine degenerates) leave the
       bucket, are deduped across tables, and re-verified exactly in the
       JVM. Shuffle volume is O(n_tables x corpus bytes) and NOTHING is
@@ -578,14 +630,9 @@ def embedding_near_duplicates(
         raise ValueError(f"unknown verify_mode: {verify_mode!r}")
     base = vectors.select(F.col(id_col).alias("vid"), F.col(emb_col).alias("emb"))
     if verify_mode == "bucket":
-        # the signature Arrow pass runs in the SCAN stage, so a compact
-        # input (one parquet file -> 1-2 splits) would serialize it on
-        # 1-2 cores regardless of cluster size; spread small inputs
-        # before the UDF (a corpus that already has enough splits skips
-        # the exchange)
-        par = vectors.sparkSession.sparkContext.defaultParallelism
-        if base.rdd.getNumPartitions() < par:
-            base = base.repartition(par, F.col("vid"))
+        # the signature Arrow pass runs in the scan stage: spread a
+        # compact input before the UDF
+        base = spread(base, "vid")
         planes = [int_plane_matrix(dim, n_planes, seed + t) for t in range(n_tables)]
         sig_all = multi_table_signature_udf(planes)
         qcol = _qvec(F.col("emb"))
@@ -594,9 +641,17 @@ def embedding_near_duplicates(
             qcol.alias("qv"),
             F.posexplode(sig_all(qcol)).alias("t", "b"),
         ).select("vid", "qv", F.col("t").cast("int").alias("t"), "b")
-        survivors = tagged.groupBy("t", "b").applyInPandas(
-            _bucket_pair_dots_fn(threshold, max_bucket_size),
-            "id_a long, id_b long, pair_dot long, na long, nb long",
+        # AQE sizes a grouped exchange by bytes and coalesced this thin
+        # one to 1-2 tasks, while the verify's cost follows its rows;
+        # an explicit partition count is never coalesced
+        par = vectors.sparkSession.sparkContext.defaultParallelism
+        survivors = (
+            tagged.repartition(par, "t", "b")
+            .sortWithinPartitions("t", "b")
+            .mapInPandas(
+                _sorted_bucket_verify_fn(threshold, max_bucket_size),
+                "id_a long, id_b long, pair_dot long, na long, nb long",
+            )
         )
         pairs = survivors.dropDuplicates(["id_a", "id_b"])
         cos = F.round(

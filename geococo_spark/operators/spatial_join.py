@@ -46,6 +46,7 @@ from pyspark.sql.types import (
 
 from geococo_spark.geometry import predicates, wkb
 from geococo_spark.operators import cells
+from geococo_spark.operators.partitioning import spread
 
 
 @pandas_udf(BooleanType())
@@ -260,8 +261,11 @@ def spatial_join(
         side; ``"tiles"`` broadcasts the tile-cell side instead and
         streams the labels, for callers joining a huge label table
         against a small static grid — the label side then never
-        collects to the driver or shuffles at all. Join output rows are
-        identical either way.
+        collects to the driver. With ``exact``, a label input with
+        fewer splits than ``defaultParallelism`` is first spread by one
+        hash exchange on ``label_id``, so the WKB decode and the exact
+        residual run on every core. Join output rows are identical
+        either way.
     :return: one row per intersecting (tile, label) pair, with all tile
         and label columns
     """
@@ -276,6 +280,12 @@ def spatial_join(
         import os
 
         dedupe_mode = os.environ.get("GEOCOCO_DEDUPE_MODE", "refpoint")
+    if broadcast_side not in ("labels", "tiles"):
+        raise ValueError(f"unknown broadcast_side: {broadcast_side!r}")
+    if exact and broadcast_side == "tiles":
+        # the streamed label side carries the WKB decode and the exact
+        # residual; a compact label input would run both on 1-2 cores
+        labels = spread(labels, label_id)
     if exact and exact_mode == "sql":
         # vertex arrays attached per LABEL (O(labels) decode) so the
         # exact residual runs as a pure JVM expression on the join rows
@@ -302,8 +312,6 @@ def spatial_join(
             joined, tile_id, label_id, geometry, cell_size, exact, exact_mode,
             dedupe, dedupe_mode, output_geometry,
         )
-    elif broadcast_side != "labels":
-        raise ValueError(f"unknown broadcast_side: {broadcast_side!r}")
 
     n_labels = label_count if label_count is not None else labels.count()
 

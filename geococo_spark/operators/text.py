@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geococo_spark.operators.partitioning import spread
+
 # tiny deterministic stopword set for the n-gram language heuristic
 EN_STOPWORDS = ["the", "and", "of", "to", "a", "in", "is", "it"]
 PUNCT = ".,!?;:"
@@ -325,12 +327,9 @@ def vocab_stats(
         F.split(F.trim(F.lower(F.coalesce(F.col(text_col), F.lit("")))), r"\s+"),
         lambda t: t != F.lit(""),
     )
-    # a compact input (single parquet file -> 1-2 splits) would run the
-    # explode + map-side partial agg on 1-2 cores; spread it first when
-    # the scan has fewer splits than the cluster has slots (round 8)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par, F.col(id_col))
+    # a compact input would run the explode + map-side partial agg on
+    # 1-2 cores (round 8)
+    df = spread(df, id_col)
     per_doc_term = (
         df.select(F.col(id_col).alias("_doc"), F.explode(toks).alias("term"))
         .groupBy("term", "_doc")

@@ -839,6 +839,26 @@ class TestJsonRoundTrip:
         assert loaded.next_image_id() == appended.next_image_id()
         assert loaded.next_annotation_id() == appended.next_annotation_id()
 
+    @pytest.mark.parametrize("section", ["image_shards", "annotation_shards"])
+    def test_hand_edited_shard_count_raises(self, spark, tmp_path, appended, section):
+        # the manifest count seeds the next id: a stale or edited count
+        # must fail the load instead of minting colliding ids
+        import json as _json
+
+        p = str(tmp_path / "coco.json")
+        appended.to_json_file(
+            p,
+            shard_images_dir=str(tmp_path / "ish"),
+            shard_annotations_dir=str(tmp_path / "ash"),
+        )
+        with open(p) as fh:
+            doc = _json.load(fh)
+        doc[section]["count"] += 1
+        with open(p, "w") as fh:
+            _json.dump(doc, fh)
+        with pytest.raises(ValueError, match=f"{section} manifest says count="):
+            CocoState.from_json_file(spark, p)
+
 
 class TestVersionBump:
     def test_truth_table(self):

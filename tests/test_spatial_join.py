@@ -301,6 +301,25 @@ class TestSqlExactMode:
         # proves nothing about the interesting path
         assert len(bbox_only) > len(got_sql) > 0
 
+    def test_tiles_orientation_spreads_compact_labels(self, spark):
+        """broadcast_side="tiles" streams the labels: a 1-split label
+        input gains exactly one spread exchange (hash on label_id, to
+        defaultParallelism partitions) before the WKB decode; an input
+        with enough splits gains none. Both equal the brute force."""
+        import re
+
+        tiles, labels = self._inputs(spark)
+        par = spark.sparkContext.defaultParallelism
+        brute = pairs(spatial_join.spatial_join_brute_force(tiles, labels))
+        spread_ex = r"Exchange hashpartitioning\(label_id#\d+L?, (\d+)\), REPARTITION_BY_NUM"
+        for inp, n_spread in ((labels.coalesce(1), 1), (labels.repartition(par + 1), 0)):
+            out = spatial_join.spatial_join(
+                tiles, inp, cell_size=25.0, broadcast_side="tiles"
+            )
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert re.findall(spread_ex, plan) == [str(par)] * n_spread
+            assert pairs(out) == brute
+
     def test_sql_mode_gridline_circles(self, spark):
         # circles whose bboxes sit exactly on tile edges (touch counts)
         labels = make_labels(spark, [(10.0, -10.0), (20.0, -20.0), (30.0, -5.0)], [5.0, 10.0, 2.5])

@@ -529,6 +529,41 @@ class TestSessionize:
             )
             assert got == base, unit
 
+    def test_null_timestamps_both_bucket_modes(self, spark):
+        """Events with a NULL ts never merge: each is its own session,
+        numbered first in event_id order, in both bucket modes and under
+        repartitioning. The bucketed merge pass must order its
+        NULL-start segments by the tiebreak, as the single window does."""
+        from datetime import datetime, timedelta
+
+        from geococo_spark.operators import events as ev_ops
+
+        t0 = datetime(2024, 1, 1)
+        rows = [
+            (0, 1, None), (1, 1, 0), (2, 1, 10), (3, 1, None), (4, 1, 70),
+            (5, 2, None), (6, 2, None), (7, 2, 5),
+        ]
+        ev = spark.createDataFrame(
+            [(e, u, None if m is None else t0 + timedelta(minutes=m)) for e, u, m in rows],
+            "event_id long, user_id long, ts timestamp_ntz",
+        )
+        at = lambda m: t0 + timedelta(minutes=m)  # noqa: E731
+        want = sorted([
+            (1, 1, 1, None, None), (1, 2, 1, None, None),
+            (1, 3, 2, at(0), at(10)), (1, 4, 1, at(70), at(70)),
+            (2, 1, 1, None, None), (2, 2, 1, None, None), (2, 3, 1, at(5), at(5)),
+        ], key=str)
+        for bucket in (None, "hour", "day"):
+            for df in (ev, ev.repartition(5)):
+                out = ev_ops.sessionize(df, bucket=bucket)
+                assert sorted(map(tuple, out.collect()), key=str) == want, bucket
+        plan = ev_ops.sessionize(ev)._jdf.queryExecution().executedPlan().toString()
+        import re
+
+        specs = re.findall(r"windowspecdefinition\(([^)]*?)specifiedwindowframe", plan)
+        pass2 = [s for s in specs if "__sb" not in s]
+        assert pass2 and all("__tb" in s for s in pass2), pass2
+
     def test_agrees_with_spark_session_window_builtin(self, spark):
         """Cross-validation against an INDEPENDENT implementation:
         Spark's built-in session_window (gap-based dynamic windows)

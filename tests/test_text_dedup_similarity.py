@@ -569,25 +569,85 @@ class TestSimilarity:
     def test_neardup_bucket_verify_matches_attach(self, spark, embs):
         """Round 8: the default per-bucket matmul verify must produce
         exactly the rows (ids AND rounded cosines) of the round-7 attach
-        path, with and without the hot-bucket cap, and its plan must not
-        contain a candidate self-join (one grouped Arrow pass instead)."""
-        for cap in (None, 12):
-            kw = dict(
-                dim=64, threshold=0.35, n_planes=6, n_tables=6, max_bucket_size=cap
+        path, with and without the hot-bucket cap. With 5-row Arrow
+        batches the sorted bucket runs straddle batches, capped runs
+        included (the cap must still change the result)."""
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        before = spark.conf.get(key)
+        got = {}
+        for batch_rows in (None, 5):
+            for cap in (None, 12):
+                kw = dict(
+                    dim=64, threshold=0.35, n_planes=6, n_tables=6, max_bucket_size=cap
+                )
+                attach = similarity.embedding_near_duplicates(
+                    embs, verify_mode="attach", **kw
+                )
+                got_a = sorted(map(tuple, attach.collect()))
+                bucket = similarity.embedding_near_duplicates(
+                    embs, verify_mode="bucket", **kw
+                )
+                try:
+                    if batch_rows is not None:
+                        spark.conf.set(key, str(batch_rows))
+                    got_b = sorted(map(tuple, bucket.collect()))
+                finally:
+                    spark.conf.set(key, before)
+                assert got_b == got_a, (batch_rows, cap)
+                got[batch_rows, cap] = got_b
+            assert len(got[batch_rows, None]) > 0  # non-vacuous at this threshold
+            assert got[batch_rows, 12] != got[batch_rows, None]  # the cap bit
+
+    def test_neardup_bucket_verify_plan(self, spark, embs):
+        """The verify's exchange is a by-number repartition on (t, b) to
+        defaultParallelism partitions (AQE never coalesces it), feeding
+        one per-partition Arrow pass instead of a grouped one."""
+        import re
+
+        out = similarity.embedding_near_duplicates(
+            embs, dim=64, threshold=0.35, n_planes=6, n_tables=6
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        m = re.findall(
+            r"Exchange hashpartitioning\(t#\d+, b#\d+L?, (\d+)\), REPARTITION_BY_NUM", plan
+        )
+        assert m == [str(spark.sparkContext.defaultParallelism)]
+        assert "MapInPandas" in plan
+        assert "FlatMapGroupsInPandas" not in plan
+
+    def test_sorted_bucket_verify_matches_per_bucket(self):
+        """The per-partition verify body over (t, b)-sorted batches of any
+        size equals the per-bucket body applied to each (t, b) group,
+        with and without a cap that drops buckets straddling batches."""
+        import pandas as pd
+
+        rng = np.random.RandomState(3)
+        n = 120
+        pdf = pd.DataFrame(
+            {
+                "vid": rng.permutation(n).astype(np.int64),
+                "qv": [rng.randint(-3, 4, size=4).astype(np.int64) for _ in range(n)],
+                "t": rng.randint(0, 3, size=n).astype(np.int32),
+                "b": rng.randint(0, 6, size=n).astype(np.int64),
+            }
+        ).sort_values(["t", "b"], kind="stable", ignore_index=True)
+        sizes = pdf.groupby(["t", "b"]).size()
+        assert sizes.max() > 8 >= sizes.min()  # the cap below bites on some
+        for cap in (None, 8):
+            want = pd.concat(
+                [
+                    similarity._bucket_pair_dots_fn(0.2, cap)(g)
+                    for _, g in pdf.groupby(["t", "b"])
+                ]
             )
-            bucket = similarity.embedding_near_duplicates(
-                embs, verify_mode="bucket", **kw
-            )
-            attach = similarity.embedding_near_duplicates(
-                embs, verify_mode="attach", **kw
-            )
-            got_b = sorted(map(tuple, bucket.collect()))
-            got_a = sorted(map(tuple, attach.collect()))
-            assert got_b == got_a
-            if cap is None:
-                assert len(got_b) > 0  # non-vacuous at this threshold
-        plan = bucket._jdf.queryExecution().executedPlan().toString()
-        assert "FlatMapGroupsInPandas" in plan
+            for batch in (1, 3, 5, n):
+                batches = [pdf.iloc[i : i + batch] for i in range(0, n, batch)]
+                outs = list(similarity._sorted_bucket_verify_fn(0.2, cap)(iter(batches)))
+                got = pd.concat(outs) if outs else want.iloc[:0]
+                assert sorted(map(tuple, got.to_numpy().tolist())) == sorted(
+                    map(tuple, want.to_numpy().tolist())
+                ), (cap, batch)
+            assert len(want) > 0
 
     def test_bucket_pair_dots_degenerate_and_margin(self):
         """Unit pin of _bucket_pair_dots_fn edge cases: zero-norm vectors

@@ -8,7 +8,9 @@ workloads grow ~LINEARLY in AMP (the driver's own sf scaling shape),
 not quadratically:
 
 - documents: dense doc_id offsets (rep*N); replica r>0 tags EVERY word
-  with the rep index — a per-word injection, so intra-replica shingle
+  with a unit separator (chr 31) and the rep index — a per-word
+  injection (the separator keeps tags of different replicas from
+  colliding, e.g. 'a' + 11 vs 'a1' + 1), so intra-replica shingle
   Jaccard is EXACTLY preserved (near-dup structure replicates) while
   cross-replica Jaccard collapses to 0 (no C(amp,2) pair blow-up).
   n_chars is recomputed from the tagged text.
@@ -63,13 +65,13 @@ def main() -> None:
                CASE WHEN r.rep = 0 THEN d.text
                     ELSE array_to_string(
                         list_transform(string_split(d.text, ' '),
-                                       w -> concat(w, r.rep)), ' ')
+                                       w -> concat(w, chr(31), r.rep)), ' ')
                END AS text,
                d.lang, d.source,
                CASE WHEN r.rep = 0 THEN d.n_chars
                     ELSE length(array_to_string(
                         list_transform(string_split(d.text, ' '),
-                                       w -> concat(w, r.rep)), ' '))
+                                       w -> concat(w, chr(31), r.rep)), ' '))
                END AS n_chars
         FROM {t('documents')} d CROSS JOIN reps r
         """,
